@@ -301,11 +301,15 @@ def _geo_polygons(t):
 # (p,2) keeps the per-row decimal chain compact (p <= 8) — values
 # identical to the wide default, ~1.8x faster (see ab_pairs).
 # r16 (VERDICT-r15 #6): narrowed to the TRUE domains (quantity 1-50,
-# discount <= 0.10, tax <= 0.08) so the discount/tax SUM-OF-SQUARES
-# accumulator lands on the compact-long decimal path too (square
-# (7,4) -> sum decimal(17,4) <= 18 digits; at (4,2) the square's sum
-# was decimal(19,4), 128-bit): 1.157 s vs 1.293 s interleaved
-# medians of 7 (tools/ab_r16.py colstats_sq, identity asserted).
+# discount <= 0.10, tax <= 0.08). The plain sums of all four columns
+# run on the compact-long path (the optimized plan sums
+# UnscaledValue(...) into MakeDecimal(..., 14/18/13/13, 2)). Of the
+# SUM-OF-SQUARES accumulators only discount's and tax's do: square
+# (7,4) -> sum decimal(17,4) <= 18 digits. l_quantity's square at
+# (4,2) is (9,4) and still sums in decimal(19,4), l_extendedprice's
+# (17,4) in decimal(27,4), both 128-bit. 1.157 s vs 1.293 s
+# interleaved medians of 7 (tools/ab_r16.py colstats_sq, identity
+# asserted).
 # Scale stays 2 on every operand, so a value outside the declared
 # domain overflows LOUDLY under ANSI instead of silently rounding.
 _LI_STAT_WIDTHS = {
@@ -627,6 +631,17 @@ def materialize(df, how: str) -> None:
         raise ValueError(f"unknown materialization tag {how!r}")
 
 
+def bench_rounds() -> int:
+    """$SPARK_GRAFT_BENCH_ROUNDS (default 2): an integer >= 1, checked
+    before the session boots rather than failing after the slate ran."""
+    raw = os.environ.get("SPARK_GRAFT_BENCH_ROUNDS", "2")
+    if not raw.isdecimal() or int(raw) < 1:
+        raise ValueError(
+            f"SPARK_GRAFT_BENCH_ROUNDS must be an integer >= 1, got {raw!r}"
+        )
+    return int(raw)
+
+
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -635,6 +650,7 @@ def main():
     except (ValueError, IndexError):
         sf = -1.0  # path carries no sf<float> suffix
 
+    rounds = bench_rounds()
     spark = get_spark(
         app_name="hillview-spark-bench",
         master=f"local[{cpus}]",
@@ -708,7 +724,6 @@ def main():
     # materialization — and ROUNDS=1 reproduces the old methodology
     # exactly. The two round medians per query are an A/A pair by
     # construction; the detail line records them as evidence.
-    rounds = int(os.environ.get("SPARK_GRAFT_BENCH_ROUNDS", "2"))
     round_medians: dict[str, list[float]] = {name: [] for name in queries}
     for rnd in range(rounds):
         for name, (factory, how) in queries.items():
@@ -745,7 +760,7 @@ def main():
             comparable_n += 1
         print(
             f"# {name}: {dt:.3f}s (min over {rounds} round medians "
-            f"{['%.3f' % m for m in meds]})",
+            f"[{', '.join(f'{m:.3f}' for m in meds)}])",
             file=sys.stderr,
         )
 

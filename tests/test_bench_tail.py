@@ -10,6 +10,8 @@ silently shed the evidence."""
 import json
 import sys
 
+import pytest
+
 
 class _LazyTables(dict):
     """headline_queries/ab_pairs close over t lazily — the dict
@@ -68,3 +70,15 @@ def test_compact_line_under_tail_budget_with_headroom(monkeypatch):
     )
     assert len(out) <= 1900
     assert json.loads(out)["queries"] == timings
+
+
+def test_bench_rounds_rejects_non_positive_and_non_integer(monkeypatch):
+    bench = _bench()
+    monkeypatch.delenv("SPARK_GRAFT_BENCH_ROUNDS", raising=False)
+    assert bench.bench_rounds() == 2
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_ROUNDS", "3")
+    assert bench.bench_rounds() == 3
+    for bad in ("0", "-1", "1.5", "two", ""):
+        monkeypatch.setenv("SPARK_GRAFT_BENCH_ROUNDS", bad)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_BENCH_ROUNDS"):
+            bench.bench_rounds()
